@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -88,6 +89,16 @@ def load_deletes(spark: SparkSession, index: Index) -> DataFrame | None:
         .select("doc_id")
     )
     return eff
+
+
+def load_deleted_ids(spark: SparkSession, index: Index) -> np.ndarray | None:
+    """``load_deletes`` collected for a driver-side drop: the sorted
+    unsigned doc ids (np.uint64), or None when there are no tombstones.
+    Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes."""
+    dels = load_deletes(spark, index)
+    if dels is None:
+        return None
+    return np.sort(dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64))
 
 
 # tombstone files up to this size get the broadcast hint; past it (a mass

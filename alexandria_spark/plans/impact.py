@@ -36,7 +36,8 @@ from pyspark.sql import SparkSession
 from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans.blocks import build_blocks, decode_blocks
 from alexandria_spark.plans.build import BLOCK_SCHEMA, Index
-from alexandria_spark.plans.query import _query_term_ids, _shard_of
+from alexandria_spark.plans.delete import load_deleted_ids
+from alexandria_spark.plans.query import _drop_deleted, _query_term_ids, _shard_of
 
 # phase-2 completion: most payload blocks a single query may pull to the
 # driver for local numpy summing. Past this, candidate ranges intersect so
@@ -403,26 +404,6 @@ def _deletes_gate(index: Index) -> bool:
     return not os.path.exists(deletes_path(index)) or _deletes_small(index)
 
 
-def _deleted_u(spark: SparkSession, index: Index) -> np.ndarray:
-    """Sorted unsigned tombstoned doc ids (empty when none)."""
-    from alexandria_spark.plans.delete import load_deletes
-
-    dels = load_deletes(spark, index)
-    if dels is None:
-        return np.empty(0, np.uint64)
-    arr = dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64)
-    return np.sort(arr)
-
-
-def _drop_deleted_u(docs_u: np.ndarray, scores: np.ndarray,
-                    deleted_u: np.ndarray):
-    if len(deleted_u) == 0 or len(docs_u) == 0:
-        return docs_u, scores
-    pos = np.minimum(np.searchsorted(deleted_u, docs_u), len(deleted_u) - 1)
-    keep = deleted_u[pos] != docs_u
-    return docs_u[keep], scores[keep]
-
-
 def impact_single_topk(spark: SparkSession, index: Index, query: str,
                        k: int = 10, cfg: EngineConfig | None = None,
                        _stats: dict | None = None,
@@ -461,7 +442,7 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
             _stats.update(blocks_read=0, blocks_total=0,
                           payload_blocks_fetched=0, fetch_jobs=0)
         return []
-    deleted_u = _deleted_u(spark, index)
+    deleted_u = load_deleted_ids(spark, index)
     # first batch = the smallest impact-order prefix that can hold k postings
     cum = meta["n"].to_numpy(np.int64).cumsum()
     first = int(np.searchsorted(cum, k) + 1)
@@ -487,7 +468,7 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
             return _search_fallback(spark, index, query, "or", k, cfg,
                                     _stats, _doc_blocks=_blocks)
         bdu, bsc = reader.block(i)
-        du, sc = _drop_deleted_u(bdu, bsc, deleted_u)
+        du, sc = _drop_deleted(bdu, bsc, deleted_u)
         docs.append(du.view(np.int64))
         scores.append(sc)
         n_collected += len(du)
@@ -540,7 +521,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     if not _deletes_gate(index):  # mass deletion: serve distributed
         return _search_fallback(spark, index, query, "or", k, cfg, _stats,
                                 _doc_blocks=_doc_blocks)
-    deleted_u = _deleted_u(spark, index)
+    deleted_u = load_deleted_ids(spark, index)
 
     if _blocks is None:  # pin meta scans + payload fetches to one snapshot
         _blocks = _pinned_scan(spark, index, "postings_impact")
@@ -611,7 +592,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
                                     _stats, _doc_blocks=_doc_blocks)
         t = max(live, key=bound.__getitem__)
         bdu, bsc = readers[t].block(ptr[t])
-        du, sc = _drop_deleted_u(bdu, bsc, deleted_u)
+        du, sc = _drop_deleted(bdu, bsc, deleted_u)
         chunks[t].append((du, sc))
         n_seen_docs += len(du)
         ptr[t] += 1
@@ -628,7 +609,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
         for t, rd in readers.items():
             while ptr[t] < len(metas[t]):
                 bdu, bsc = rd.block(ptr[t])
-                du, sc = _drop_deleted_u(bdu, bsc, deleted_u)
+                du, sc = _drop_deleted(bdu, bsc, deleted_u)
                 chunks[t].append((du, sc))
                 ptr[t] += 1
                 drained += 1

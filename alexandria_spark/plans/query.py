@@ -34,6 +34,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -67,6 +68,21 @@ RESULT_SCHEMA = StructType(
         StructField("n_terms", IntegerType()),
     ]
 )
+
+
+def _result_frame(spark: SparkSession, docs_u: np.ndarray | None = None,
+                  scores: np.ndarray | None = None,
+                  n_terms: int = 0) -> DataFrame:
+    """Driver-computed results (no rows by default) as a RESULT_SCHEMA
+    frame. An Arrow table becomes a local relation that collects without
+    a Spark job; ``createDataFrame(list)`` launches a Python-worker job
+    per call, even for an empty list."""
+    docs = np.empty(0, np.int64) if docs_u is None else docs_u.view(np.int64)
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(docs, pa.int64()),
+        "score": pa.array(np.empty(0) if scores is None else scores, pa.float64()),
+        "n_terms": pa.array(np.full(len(docs), n_terms, np.int32)),
+    }), RESULT_SCHEMA)
 
 
 # Driver-side metadata fetches are guarded at this many rows: pruning pays
@@ -200,7 +216,7 @@ def search(
     else:
         term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return _result_frame(spark)
     shards = sorted({_shard_of(t, cfg.num_shards) for t in term_ids})
 
     src = _blocks if _blocks is not None else index.postings(spark)
@@ -227,7 +243,7 @@ def search(
     if meta is not None:
         kept = _prune_and_blocks(meta, term_ids)
         if len(kept) == 0:
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return _result_frame(spark)
         if len(kept) < len(meta):
             keys = spark.createDataFrame(
                 kept[["term_id", "salt", "block_id"]]
@@ -319,7 +335,7 @@ def search_phrase_long(
     # persist across the caller's action
     phrase_df = ph.count()
     if phrase_df == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return _result_frame(spark)
     meta = index.meta()
     n_docs, avg_dl = int(meta["n_docs"]), float(meta["avg_dl"])
     scored = ph.withColumn("df", F.lit(phrase_df)).withColumn(
@@ -539,23 +555,10 @@ def search_bmw(
             uniq, summed = uniq[keep], summed[keep]
         return uniq, summed
 
-    from alexandria_spark.plans.delete import load_deletes
+    from alexandria_spark.plans.delete import load_deleted_ids
 
-    dels = load_deletes(spark, index)
-    # Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes
-    deleted_u = (
-        np.sort(dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64))
-        if dels is not None else np.empty(0, np.uint64)
-    )
-
-    def _drop_deleted(docs_u, scores):
-        if len(deleted_u) == 0 or len(docs_u) == 0:
-            return docs_u, scores
-        pos = np.minimum(np.searchsorted(deleted_u, docs_u), len(deleted_u) - 1)
-        keep = deleted_u[pos] != docs_u
-        return docs_u[keep], scores[keep]
-
-    docs_u, scores = _drop_deleted(*_eval_buckets(phase1))
+    deleted = load_deleted_ids(spark, index)
+    docs_u, scores = _drop_deleted(*_eval_buckets(phase1), deleted)
     if len(scores) >= k:
         tau = np.partition(scores, len(scores) - k)[len(scores) - k]
     else:
@@ -574,7 +577,7 @@ def search_bmw(
         # serve exactly via that path instead
         return _collect_topk(spark, index, query, mode, k, cfg)
     if remaining:
-        d2, s2 = _drop_deleted(*_eval_buckets(remaining))
+        d2, s2 = _drop_deleted(*_eval_buckets(remaining), deleted)
         docs_u = np.concatenate([docs_u, d2])
         scores = np.concatenate([scores, s2])
     if len(docs_u) == 0:
@@ -669,13 +672,13 @@ class QueryEngine:
         cfg = self.cfg
         term_ids = _query_term_ids(query, mode, cfg)
         if not term_ids:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _result_frame(self.spark)
         blocks = self.blocks.where(F.col("term_id").isin(term_ids))
         if mode == "and" and len(term_ids) > 1 and self.meta is not None:
             meta = self.meta[self.meta["term_id"].isin(term_ids)]
             kept = _prune_and_blocks(meta, term_ids)
             if len(kept) == 0:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
+                return _result_frame(self.spark)
             if len(kept) < len(meta):
                 keys = self.spark.createDataFrame(kept[["term_id", "salt", "block_id"]])
                 blocks = blocks.join(
@@ -693,28 +696,84 @@ class QueryEngine:
         return top_k(agg.withColumn("n_terms", F.col("n_terms").cast("int")), k)
 
 
-
 # ---------------------------------------------------- WAND kernel (shared)
-# Used by LocalIndex (whole-index, driver RAM) and by the doc-partitioned
-# layout (per-bucket, inside applyInPandas on executors).
+# Used through PinnedBlocks by LocalIndex and DocPartEngine (whole table,
+# driver RAM) and by search_docpart (per bucket, inside applyInPandas on
+# executors).
 
-def _term_map(pdf: pd.DataFrame) -> dict[int, dict]:
-    """Block rows → per-term arrays (metadata + encoded payloads)."""
-    terms: dict[int, dict] = {}
-    for tid, g in pdf.groupby("term_id", sort=False):
-        # order blocks by (salt, block_id) => unsigned-doc-sorted runs per salt
-        g = g.sort_values(["salt", "block_id"], kind="stable")
-        terms[int(tid)] = {
-            "min": _u(g["min_doc"].to_numpy()),
-            "max": _u(g["max_doc"].to_numpy()),
-            "ms": g["max_score"].to_numpy(np.float32),
-            "n": g["n"].to_numpy(np.int64),
-            "deltas": g["doc_deltas"].tolist(),
-            "scores": g["scores"].tolist(),
-            "np": int(g["n"].sum()),
-            "S": float(g["max_score"].max()) if len(g) else 0.0,
+class PinnedBlocks:
+    """Block rows held in memory for the WAND kernel, sorted by (term_id,
+    salt, block_id) so a query slices its own terms' runs and builds a term
+    map for those terms alone. Within a term, (salt, block_id) order gives
+    unsigned-doc-sorted runs per salt. The columns are read-only: term maps
+    are views into them, shared by concurrent queries."""
+
+    COLUMNS = ("term_id", "salt", "block_id", "n", "min_doc", "max_doc",
+               "max_score", "doc_deltas", "scores")
+
+    def __init__(self, pdf: pd.DataFrame):
+        pdf = pdf.sort_values(["term_id", "salt", "block_id"], kind="stable")
+        self.tids = pdf["term_id"].to_numpy(np.int64)
+        self.cols = {
+            "min": _u(pdf["min_doc"].to_numpy()),
+            "max": _u(pdf["max_doc"].to_numpy()),
+            "ms": pdf["max_score"].to_numpy(np.float32),
+            "n": pdf["n"].to_numpy(np.int64),
+            "deltas": pdf["doc_deltas"].to_numpy(object),
+            "scores": pdf["scores"].to_numpy(object),
         }
-    return terms
+        for col in self.cols.values():
+            col.flags.writeable = False
+
+    @classmethod
+    def load(cls, spark: SparkSession, index: Index) -> "PinnedBlocks":
+        """Collect an index's whole block table to the driver (one job)."""
+        return cls(index.postings(spark).select(*cls.COLUMNS).toPandas())
+
+    def terms(self, tids: list[int]) -> dict[int, dict]:
+        """Per-term arrays (metadata + encoded payloads) for ``tids``;
+        terms with no blocks are absent."""
+        out: dict[int, dict] = {}
+        for tid in dict.fromkeys(tids):
+            lo = int(np.searchsorted(self.tids, tid, side="left"))
+            hi = int(np.searchsorted(self.tids, tid, side="right"))
+            if hi == lo:
+                continue
+            t = {name: col[lo:hi] for name, col in self.cols.items()}
+            t["np"] = int(t["n"].sum())
+            t["S"] = float(t["ms"].max())
+            out[int(tid)] = t
+        return out
+
+    def topk(self, tids: list[int], mode: str, k: int | None,
+             load_deleted=lambda: None) -> tuple[np.ndarray, np.ndarray]:
+        """Exact top-k (score desc, unsigned doc asc) of an ``and``/``or``
+        query as (docs_u64, scores_f64); ``k=None`` keeps every match.
+        ``load_deleted()`` gives the sorted tombstoned ids (or None); it is
+        called only once every term an answer needs is present, and its
+        docs are dropped before any truncation."""
+        terms = self.terms(tids)
+        if not terms or (mode == "and" and len(terms) < len(set(tids))):
+            return np.empty(0, np.uint64), np.empty(0, np.float64)
+        deleted = load_deleted()
+        if mode == "and":
+            docs_u, scores = _drop_deleted(*_wand_and(terms, tids), deleted)
+        else:
+            docs_u, scores = _wand_or(terms, tids, k, deleted)
+        if k is None:
+            return docs_u, scores
+        order = np.lexsort((docs_u, -scores))[:k]
+        return docs_u[order], scores[order]
+
+
+def _drop_deleted(docs_u: np.ndarray, scores: np.ndarray,
+                  deleted: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
+    """Drop docs found in the sorted unsigned ``deleted`` ids."""
+    if deleted is None or len(deleted) == 0 or len(docs_u) == 0:
+        return docs_u, scores
+    pos = np.minimum(np.searchsorted(deleted, docs_u), len(deleted) - 1)
+    keep = deleted[pos] != docs_u
+    return docs_u[keep], scores[keep]
 
 
 def _decode_term(t: dict, which: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -770,8 +829,12 @@ def _wand_and(terms: dict[int, dict], tids: list[int]) -> tuple[np.ndarray, np.n
     return cand, cscore
 
 
-def _wand_or(terms: dict[int, dict], tids: list[int], k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Disjunctive term-at-a-time quit/continue with block-max skipping."""
+def _wand_or(terms: dict[int, dict], tids: list[int], k: int | None,
+             deleted: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """Disjunctive term-at-a-time quit/continue with block-max skipping.
+    ``k=None`` never quits (every match). Docs in the sorted ``deleted``
+    ids never become accumulators, so the quit threshold counts live docs
+    only."""
     infos = [terms[t] for t in tids if t in terms]
     if not infos:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
@@ -784,7 +847,7 @@ def _wand_or(terms: dict[int, dict], tids: list[int], k: int) -> tuple[np.ndarra
     acc_scores = np.empty(0, np.float64)
     frozen = False  # True => no new accumulators (quit -> continue phase)
     for i, t in enumerate(infos):
-        if not frozen and len(acc_docs) >= k:
+        if not frozen and k is not None and len(acc_docs) >= k:
             kth = np.partition(acc_scores, len(acc_scores) - k)[len(acc_scores) - k]
             # strict >: an unseen doc reaching exactly suffix[i] ties the kth
             # score and can win the ascending-doc-id tie-break, so it must
@@ -796,6 +859,8 @@ def _wand_or(terms: dict[int, dict], tids: list[int], k: int) -> tuple[np.ndarra
         else:
             which = np.arange(len(t["n"]))
         docs, scores = _decode_term(t, which)
+        if not frozen:  # frozen: only accumulators, already live, are hit
+            docs, scores = _drop_deleted(docs, scores, deleted)
         if len(docs) == 0:
             continue
         o = np.argsort(docs, kind="stable")
@@ -837,16 +902,15 @@ class LocalIndex:
     """
 
     # refuse to pin more than this many parquet bytes of postings into
-    # driver RAM (decoded pandas is larger still); past it, serve through
-    # QueryEngine/DocPartEngine, whose state stays on the executors
+    # driver RAM (decoded pandas is larger still; see pin_budget); past it,
+    # serve through QueryEngine, or DocPartEngine, which then keeps its
+    # state on the executors
     MAX_PIN_BYTES = 2 << 30
 
     def __init__(self, spark: SparkSession, index: Index, cfg: EngineConfig | None = None,
                  max_pin_bytes: int | None = None):
         self.cfg = cfg or index.config()
-        from alexandria_spark.plans.checkpoint import parquet_dir_bytes
-
-        limit = max_pin_bytes if max_pin_bytes is not None else self.MAX_PIN_BYTES
+        limit = max_pin_bytes if max_pin_bytes is not None else pin_budget(spark)
         total = parquet_dir_bytes(index.postings_path)
         if total > limit:
             raise ValueError(
@@ -855,43 +919,41 @@ class LocalIndex:
                 f"through QueryEngine / DocPartEngine / search() instead, "
                 f"or raise max_pin_bytes explicitly."
             )
-        from alexandria_spark.plans.delete import load_deletes
+        from alexandria_spark.plans.delete import load_deleted_ids
 
-        dels = load_deletes(spark, index)
-        # Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes
-        self.deleted = (
-            np.sort(dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64))
-            if dels is not None
-            else np.empty(0, np.uint64)
-        )
-        pdf = index.postings(spark).select(
-            "term_id", "salt", "block_id", "n", "min_doc", "max_doc",
-            "max_score", "doc_deltas", "scores",
-        ).toPandas()
-        self.terms = _term_map(pdf)
+        self.deleted = load_deleted_ids(spark, index)
+        self.blocks = PinnedBlocks.load(spark, index)
 
     def search(self, query: str, mode: str = "and", k: int = 10) -> list[tuple[int, float]]:
         tids = _query_term_ids(query, mode, self.cfg)
         if not tids:
             return []
-        if mode == "and":
-            res = self._search_and(tids)
-        else:  # or | phrase (a phrase is a single-term disjunction)
-            res = self._search_or(tids, k)
-        docs_u, scores = res
-        if len(self.deleted) and len(docs_u):
-            pos = np.searchsorted(self.deleted, docs_u)
-            pos_c = np.minimum(pos, len(self.deleted) - 1)
-            keep = self.deleted[pos_c] != docs_u
-            docs_u, scores = docs_u[keep], scores[keep]
-        if len(docs_u) == 0:
-            return []
-        order = np.lexsort((docs_u, -scores))[:k]
+        # or | phrase (a phrase is a single-term disjunction)
+        docs_u, scores = self.blocks.topk(tids, "and" if mode == "and" else "or",
+                                          k, lambda: self.deleted)
         docs_i = docs_u.view(np.int64)
-        return [(int(docs_i[i]), float(scores[i])) for i in order]
+        return [(int(d), float(s)) for d, s in zip(docs_i, scores)]
 
-    def _search_and(self, tids: list[int]):
-        return _wand_and(self.terms, tids)
 
-    def _search_or(self, tids: list[int], k: int):
-        return _wand_or(self.terms, tids, k)
+# pinning collects the table through the driver: the JVM holds the
+# serialized Arrow batches while Python builds the pandas copy (each
+# measured 1.0-1.4x the parquet bytes on the synthetic corpus), so the
+# default budget keeps this much headroom below spark.driver.maxResultSize
+# and below the driver heap
+_PIN_HEADROOM = 4
+
+
+def pin_budget(spark: SparkSession) -> int:
+    """Parquet bytes of postings a driver-pinned engine may hold by
+    default: LocalIndex.MAX_PIN_BYTES, capped at 1/_PIN_HEADROOM of
+    ``spark.driver.maxResultSize`` (0 means unlimited) and of the driver
+    JVM's max heap."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    caps = [LocalIndex.MAX_PIN_BYTES,
+            jvm.java.lang.Runtime.getRuntime().maxMemory() // _PIN_HEADROOM]
+    result_cap = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        sc.getConf().get("spark.driver.maxResultSize", "1g"))
+    if result_cap > 0:
+        caps.append(result_cap // _PIN_HEADROOM)
+    return min(caps)

@@ -1,5 +1,6 @@
 """Tombstone deletes + compaction (doc-store remove/versioning analogue)."""
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -133,3 +134,55 @@ def test_compact_rederives_docpart(spark, tmp_path):
               for r in search(spark, idx, "def", "or", 20, CFG).collect()]
     got = [(r["doc_id"], round(r["score"], 6)) for r in after]
     assert got == expect
+
+
+def test_tombstones_do_not_take_topk_slots(spark, tmp_path, monkeypatch):
+    """Deleting a query's top docs must leave k live answers in every
+    engine: tombstones are dropped before any top-k truncation (per
+    bucket in the doc-partitioned engines) and never count toward the OR
+    kernel's quit threshold. The engines are built before the delete, so
+    this also covers deletes made after a warm engine's init. A tombstone
+    set too large to ship to executor tasks takes the executor path's
+    untruncated anti-join instead, with the same answers."""
+    from alexandria_spark.plans import delete as delete_mod
+    from alexandria_spark.plans.docpart import (
+        DocPartEngine,
+        rebuild_docpart_from_postings,
+        search_docpart,
+    )
+
+    docs = with_doc_ids(synth_corpus(spark, 80, seed=33))
+    idx = build_index(spark, docs, str(tmp_path / "idx"), CFG, text_col="content")
+    dp = rebuild_docpart_from_postings(spark, idx.path, CFG, n_buckets=1)
+    pinned = DocPartEngine(spark, dp, CFG)
+    with monkeypatch.context() as m:  # a zero pin budget: executor cache
+        m.setattr(LocalIndex, "MAX_PIN_BYTES", 0)
+        cached = DocPartEngine(spark, dp, CFG)
+    assert pinned.pinned is not None and cached.pinned is None
+
+    victims = [r.doc_id for r in search(spark, idx, "def", "or", k=5).collect()][:3]
+    assert len(victims) == 3
+    delete_docs(spark, idx, victims)
+    exp = [(r.doc_id, r.score) for r in search(spark, idx, "def", "or", k=3).collect()]
+    assert len(exp) == 3 and not set(victims) & {d for d, _ in exp}
+
+    def rows(df):
+        return [(r.doc_id, r.score) for r in df.collect()]
+
+    try:
+        got = {
+            "search_docpart": rows(search_docpart(spark, dp, "def", "or", 3, CFG)),
+            "docpart_pinned": rows(pinned.search("def", "or", 3)),
+            "docpart_cached": rows(cached.search("def", "or", 3)),
+            "local": LocalIndex(spark, idx, CFG).search("def", "or", 3),
+            "query_engine": rows(QueryEngine(spark, idx, CFG, cache=False)
+                                 .search("def", "or", 3)),
+        }
+        monkeypatch.setattr(delete_mod, "_BROADCAST_DELETES_MAX_BYTES", 0)
+        got["search_docpart_mass"] = rows(search_docpart(spark, dp, "def", "or", 3, CFG))
+        got["docpart_cached_mass"] = rows(cached.search("def", "or", 3))
+    finally:
+        cached.unpersist()
+    for name, g in got.items():
+        assert [d for d, _ in g] == [d for d, _ in exp], name
+        assert np.allclose([s for _, s in g], [s for _, s in exp], rtol=1e-9), name

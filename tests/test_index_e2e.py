@@ -293,37 +293,51 @@ def test_query_engine_metadata_guard(spark, synth, monkeypatch):
         assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9)
 
 
-def test_docpart_rank_identity(spark, synth, tmp_path_factory):
-    from alexandria_spark.plans.docpart import build_docpart_index, search_docpart
+@pytest.fixture(scope="module")
+def dp_synth(spark, tmp_path_factory):
+    """The synth corpus built straight into the doc-partitioned layout."""
+    from alexandria_spark.plans.docpart import build_docpart_index
 
-    _, oracle = synth
     pdf = synth_corpus_pdf(n_docs=150, seed=42)
     docs = with_doc_ids(spark.createDataFrame(pdf))
     path = str(tmp_path_factory.mktemp("idx_doc"))
-    dp = build_docpart_index(spark, docs, path, CFG, n_buckets=6, text_col="content")
+    return build_docpart_index(spark, docs, path, CFG, n_buckets=6, text_col="content")
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), read from a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_docpart_rank_identity(spark, synth, dp_synth):
+    from alexandria_spark.plans.docpart import search_docpart
+
+    _, oracle = synth
     for q, mode in QUERIES:
         exp = oracle.search(q, mode, k=10)
-        got = [(r.doc_id, r.score) for r in search_docpart(spark, dp, q, mode, k=10).collect()]
+        got = [(r.doc_id, r.score) for r in search_docpart(spark, dp_synth, q, mode, k=10).collect()]
         assert [d for d, _ in got] == [d for d, _ in exp], (q, mode, got[:3], exp[:3])
         assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9), (q, mode)
 
 
-def test_docpart_engine_warm_serving(spark, synth, tmp_path_factory):
-    """DocPartEngine must serve from the pinned cache (InMemoryTableScan in
-    the plan, no parquet FileScan) and stay rank-identical to the cold
-    search_docpart path."""
-    from alexandria_spark.plans.docpart import (
-        DocPartEngine,
-        build_docpart_index,
-        search_docpart,
-    )
+def test_docpart_engine_warm_serving(spark, synth, dp_synth, monkeypatch):
+    """Above the driver pin budget (forced to zero), DocPartEngine must
+    serve from the executor cache (InMemoryTableScan in the plan, no
+    parquet FileScan) and stay rank-identical to the cold search_docpart
+    path."""
+    from alexandria_spark.plans.docpart import DocPartEngine, search_docpart
 
     _, oracle = synth
-    pdf = synth_corpus_pdf(n_docs=150, seed=42)
-    docs = with_doc_ids(spark.createDataFrame(pdf))
-    path = str(tmp_path_factory.mktemp("idx_doc_warm"))
-    dp = build_docpart_index(spark, docs, path, CFG, n_buckets=6, text_col="content")
-    eng = DocPartEngine(spark, dp, CFG)
+    monkeypatch.setattr(LocalIndex, "MAX_PIN_BYTES", 0)
+    eng = DocPartEngine(spark, dp_synth, CFG)
+    assert eng.pinned is None
     try:
         for q, mode in QUERIES:
             warm = eng.search(q, mode, k=10)
@@ -334,10 +348,121 @@ def test_docpart_engine_warm_serving(spark, synth, tmp_path_factory):
             assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
             assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9)
             cold = [(r.doc_id, r.score)
-                    for r in search_docpart(spark, dp, q, mode, k=10).collect()]
+                    for r in search_docpart(spark, dp_synth, q, mode, k=10).collect()]
             assert got == cold, (q, mode)
     finally:
         eng.unpersist()
+
+
+def test_docpart_engine_pin_budget_boundary(spark, synth, dp_synth, monkeypatch):
+    """The driver pin takes a table exactly at the budget and not one byte
+    past it; the default budget keeps headroom below maxResultSize; a
+    collect that fails at init falls back to the executor cache."""
+    from alexandria_spark.plans.checkpoint import parquet_dir_bytes
+    from alexandria_spark.plans.docpart import DocPartEngine
+    from alexandria_spark.plans.query import PinnedBlocks, pin_budget
+
+    conf = spark.sparkContext.getConf()
+    if conf.get("spark.driver.maxResultSize", None) is None:
+        assert pin_budget(spark) <= (1 << 30) // 4  # default maxResultSize 1g
+    table = parquet_dir_bytes(dp_synth.postings_path)
+    monkeypatch.setattr(LocalIndex, "MAX_PIN_BYTES", table)
+    assert pin_budget(spark) == table
+    assert DocPartEngine(spark, dp_synth, CFG).pinned is not None
+    monkeypatch.setattr(LocalIndex, "MAX_PIN_BYTES", table - 1)
+    over = DocPartEngine(spark, dp_synth, CFG)
+    over.unpersist()
+    assert over.pinned is None and over.blocks is not None
+
+    def collect_fails(cls, spark, index):
+        raise MemoryError("driver out of memory")
+
+    monkeypatch.setattr(LocalIndex, "MAX_PIN_BYTES", table)
+    monkeypatch.setattr(PinnedBlocks, "load", classmethod(collect_fails))
+    eng = DocPartEngine(spark, dp_synth, CFG)
+    try:
+        assert eng.pinned is None and eng.blocks is not None
+        _, oracle = synth
+        got = [(r.doc_id, r.score) for r in eng.search("def return", "or", k=10).collect()]
+        exp = oracle.search("def return", "or", k=10)
+        assert [d for d, _ in got] == [d for d, _ in exp]
+    finally:
+        eng.unpersist()
+
+
+def test_docpart_engine_pinned_serving(spark, synth, dp_synth):
+    """Within the driver pin budget DocPartEngine answers on the driver:
+    zero Spark jobs per query (AND, OR, absent term, vacuous), results
+    rank-identical to the oracle and to cold search_docpart, including the
+    k=None AND candidate set the serve pipeline consumes."""
+    from alexandria_spark.plans.docpart import DocPartEngine, search_docpart
+
+    _, oracle = synth
+    eng = DocPartEngine(spark, dp_synth, CFG)
+    assert eng.pinned is not None and eng.blocks is None
+    for q, mode in QUERIES + [("!!! ...", "and"), ("", "or")]:
+        got, jobs = _jobs(spark, lambda: [(r.doc_id, r.score) for r in
+                                          eng.search(q, mode, k=10).collect()])
+        assert jobs == 0, (q, mode, jobs)
+        exp = oracle.search(q, mode, k=10)
+        assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
+        assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9)
+        cold, cold_jobs = _jobs(spark, lambda: [
+            (r.doc_id, r.score)
+            for r in search_docpart(spark, dp_synth, q, mode, k=10).collect()])
+        assert got == cold, (q, mode)
+        if q.strip("!. "):
+            assert cold_jobs >= 1  # the counter sees the executor path's job
+    for q in ("def return", "def", "def zzz_absent"):
+        full = sorted((r.doc_id, r.score) for r in eng.search(q, "and", k=None).collect())
+        cold = sorted((r.doc_id, r.score)
+                      for r in search_docpart(spark, dp_synth, q, "and", None).collect())
+        exp = sorted(oracle.search(q, "and", k=None))
+        assert full == cold, q
+        assert [d for d, _ in full] == [d for d, _ in exp], q
+        assert np.allclose([s for _, s in full], [s for _, s in exp], rtol=1e-9)
+
+
+def test_pinned_docpart_engine_concurrent_queries(spark, dp_synth):
+    """Client threads share one pinned engine: every concurrent answer
+    equals the sequential one."""
+    import sys
+    import threading
+
+    from alexandria_spark.plans.docpart import DocPartEngine
+
+    eng = DocPartEngine(spark, dp_synth, CFG)
+    expected = {qm: eng.search(*qm, k=10).collect() for qm in QUERIES}
+    wrong, raised = [], []
+
+    def client(c):
+        try:
+            for i in range(3 * len(QUERIES)):
+                qm = QUERIES[(c + i) % len(QUERIES)]
+                if eng.search(*qm, k=10).collect() != expected[qm]:
+                    wrong.append(qm)
+        except Exception as exc:  # surfaced by the assert below
+            raised.append(repr(exc))
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert raised == [] and wrong == []
+
+
+def test_vacuous_search_runs_no_job(spark, synth):
+    """A query with no terms is answered on the driver, not by a job."""
+    idx, _ = synth
+    rows, jobs = _jobs(spark, lambda: search(spark, idx, "!!! ...", "and", k=10).collect())
+    assert rows == [] and jobs == 0
 
 
 def test_decoded_postings_iteration(spark, micro_index):

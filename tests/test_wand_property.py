@@ -2,14 +2,15 @@
 
 Random posting multisets — zero scores, salted hot terms (doc ranges
 overlapping across salts), u64-boundary doc ids — are encoded through the
-real block codec (build_blocks -> _term_map), then evaluated by the
+real block codec (build_blocks -> PinnedBlocks), then evaluated by the
 production kernels and compared against a 10-line numpy brute force:
 
 * _wand_and  — full candidate set identity (docs AND exact scores);
 * _wand_or   — top-k identity, which is exactly what the quit/continue
   admission boundary (plans/query.py, strict-> rule) must preserve: a doc
   first seen at suffix-bound equality can still tie the kth score and win
-  the ascending-doc-id tie-break;
+  the ascending-doc-id tie-break; with tombstoned docs, the top-k of the
+  live docs (deleted docs must not count toward the quit threshold);
 * _bucket_bounds — the soundness invariant behind search_bmw's τ̂≥ rule:
   every doc's bucket is feasible and its metadata upper bound dominates the
   doc's true score, so skipping ub<τ̂ buckets can never drop a winner.
@@ -26,8 +27,8 @@ from hypothesis import strategies as st
 
 from alexandria_spark.plans.blocks import build_blocks
 from alexandria_spark.plans.query import (
+    PinnedBlocks,
     _bucket_bounds,
-    _term_map,
     _u,
     _wand_and,
     _wand_or,
@@ -66,14 +67,14 @@ def _encode(postings: dict, block_size: int, n_salts: int):
             salt = int(np.int64(d).astype(np.uint64) % np.uint64(n_salts))
             rows.append((t, salt, d, s, 1))
     if not rows:
-        return _term_map(build_blocks(
+        return PinnedBlocks(build_blocks(
             pd.DataFrame(columns=["term_id", "salt", "doc_id", "score", "tf"]),
-            block_size))
+            block_size)).terms(TERMS)
     pdf = pd.DataFrame(rows, columns=["term_id", "salt", "doc_id", "score", "tf"])
     key_u = pdf["doc_id"].to_numpy(np.int64).view(np.uint64)
     pdf = pdf.iloc[np.lexsort((key_u, pdf["salt"].to_numpy(),
                                pdf["term_id"].to_numpy()))].reset_index(drop=True)
-    return _term_map(build_blocks(pdf, block_size))
+    return PinnedBlocks(build_blocks(pdf, block_size)).terms(TERMS)
 
 
 def _brute(postings: dict, tids: list[int], mode: str):
@@ -123,6 +124,24 @@ def test_wand_or_topk_matches_brute_force(postings, block_size, n_salts, k):
     # the kernel may drop docs provably outside the top-k; the top-k itself
     # (including the unsigned-doc-asc tie-break) must be identical
     assert _ranked(got_d, got_s, k) == _ranked(exp_d, exp_s, k)
+
+
+@settings(max_examples=100, deadline=None)
+@given(posting_sets(), st.integers(1, 3), st.sampled_from([1, 3]),
+       st.integers(1, 6), st.data())
+def test_wand_or_topk_skips_deleted_docs(postings, block_size, n_salts, k,
+                                         data):
+    terms = _encode(postings, block_size, n_salts)
+    tids = list(postings)
+    all_docs = sorted({d for plist in postings.values() for d, _ in plist})
+    dead = data.draw(st.lists(st.sampled_from(all_docs), unique=True)
+                     if all_docs else st.just([]))
+    deleted = np.sort(np.array(dead, dtype=np.int64).view(np.uint64))
+    got_d, got_s = _wand_or(terms, tids, k, deleted)
+    exp_d, exp_s = _brute(postings, tids, "or")
+    live = ~np.isin(exp_d, deleted)
+    assert not np.isin(got_d, deleted).any()
+    assert _ranked(got_d, got_s, k) == _ranked(exp_d[live], exp_s[live], k)
 
 
 @settings(max_examples=100, deadline=None)
